@@ -6,8 +6,9 @@ knobs that could move a symmetric-hash join bound on a single node:
 
   - state-store provider: HDFS-backed (default, on-heap map + file
     snapshot) vs RocksDB (native, off-heap);
-  - shuffle partitions (= state store partitions at first run): 8 / 32
-    / 64 on the 32-thread box.
+  - shuffle partitions (= state store partitions at first run): 1 / 2
+    / 4 / 8 / 32 / 64, so the low end the state-sizing rule picks is
+    measured next to the round-5 32-core grid (8 / 32 / 64).
 
 Each cell runs the identical sparse-match workload from
 throughput_probe.py (wide user_id key space: per-row cost is state
@@ -16,6 +17,9 @@ query with a fresh (temp) checkpoint, since both knobs are fixed at
 first query start.
 
 Usage: python scripts/join_throughput_ab.py [--secs=45] [--rate=500000]
+       python scripts/join_throughput_ab.py --secs=60 --rate=150000
+         (4 cores: offers ~40k rows/s, 30k impressions + 10k clicks,
+         which HDFS state at 1-8 partitions sustains; BASELINE.md)
 Prints one JSON line per cell + a markdown table for BASELINE.md.
 """
 
@@ -153,7 +157,7 @@ def tuned_cells(spark) -> list:
     cells = [
         run_cell(spark, HDFS, 32, label="core-count default"),
         run_cell(spark, HDFS, rec_parts, label=f"state_sizing pick ({rec_parts})"),
-        run_cell(spark, HDFS, 8, label="r5 grid winner"),
+        run_cell(spark, HDFS, 8, label="8 partitions (32-core r5 grid winner)"),
         run_cell(
             spark, HDFS, 8,
             extra_conf={"spark.sql.streaming.stateStore.minDeltasForSnapshot": 50},
@@ -193,7 +197,7 @@ def main() -> None:
         return
     cells = []
     for provider in (HDFS, ROCKSDB):
-        for parts in (8, 32, 64):
+        for parts in (1, 2, 4, 8, 32, 64):
             cells.append(run_cell(spark, provider, parts))
     print("\n| provider | shuffle.partitions | sustained rows/s | state rows | commit ms |")
     print("|---|---|---|---|---|")

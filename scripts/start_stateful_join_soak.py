@@ -67,7 +67,6 @@ from streams_prototyping_spark.streaming.pipelines import (  # noqa: E402
     ads_with_clicks_stream,
 )
 from streams_prototyping_spark.streaming.state_sizing import (  # noqa: E402
-    _ROCKSDB_PROVIDER,
     PROVIDER_FLIP_HEAP_FRACTION,
     estimate_join_state_rows,
     executor_heap_bytes,
@@ -125,9 +124,6 @@ def main() -> None:
         checkpoint_dir=ckpt,
         query_name="ads_with_clicks_soak",
     )
-    provider_conf = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    picked = "rocksdb" if provider_conf == _ROCKSDB_PROVIDER else "hdfs"
-    n_parts = spark.conf.get("spark.sql.shuffle.partitions")
 
     t0 = time.time()
     samples = []  # (elapsed, state_rows, state_bytes, in_rows_per_s)
@@ -150,6 +146,12 @@ def main() -> None:
             )
         )
     q.stop()
+    # what the query pinned, from its own progress: start_stateful
+    # restores the session's settings once start() returns
+    op = q.lastProgress["stateOperators"][0]
+    n_parts = op["numShufflePartitions"]
+    rocksdb = any(k.startswith("rocksdb") for k in op.get("customMetrics", {}))
+    picked = "rocksdb" if rocksdb else "hdfs"
     peak_rows = max((s[1] for s in samples), default=0)
     peak_bytes = max((s[2] for s in samples), default=0)
     tail = samples[-max(1, len(samples) // 4):]
@@ -167,7 +169,7 @@ def main() -> None:
         "est_over_half_heap": est_bytes >= heap * PROVIDER_FLIP_HEAP_FRACTION,
         "provider_requested": PROVIDER,
         "provider_picked": picked,
-        "partitions": int(n_parts),
+        "partitions": n_parts,
         "peak_state_rows": peak_rows,
         "peak_state_bytes": peak_bytes,
         "estimate_conservative": est_bytes >= peak_bytes,

@@ -109,7 +109,6 @@ def probe(
             break
         time.sleep(1.0)
     progress = [json.loads(p.json) for p in q.recentProgress]
-    spark = out_df.sparkSession
     q.stop()
     sustained = _sustained(progress)
     rec = {
@@ -120,13 +119,12 @@ def probe(
         "batches": len(progress),
     }
     if sizing is not None:
-        rec["state_partitions"] = int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        prov = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        rec["provider"] = "rocksdb" if "RocksDB" in prov else "hdfs"
+        # what the query pinned, from its own progress: start_stateful
+        # restores the session's settings once start() returns
+        op = next(o for p in reversed(progress) for o in p.get("stateOperators") or [])
+        rec["state_partitions"] = op["numShufflePartitions"]
+        rocksdb = any(k.startswith("rocksdb") for k in op.get("customMetrics", {}))
+        rec["provider"] = "rocksdb" if rocksdb else "hdfs"
     print(json.dumps(rec), flush=True)
     return rec
 
@@ -137,9 +135,10 @@ def main() -> None:
 
     results = []
     # App 1: windowed AVG aggregation (Aggregations.java topology) —
-    # sized via the production start_stateful path (state here is one
-    # row per open 30 s window, so the conservative rate-x-horizon
-    # estimate still lands on the parallelism floor)
+    # sized via the production start_stateful path. The real state is
+    # one row per open 30 s window, but the conservative rate-x-horizon
+    # estimate (RATE x 60 s x 64 B) sets the count: 8 partitions at the
+    # default 500k rows/s, 1 below ~70k rows/s.
     results.append(
         probe(
             "windowed_avg_stream",

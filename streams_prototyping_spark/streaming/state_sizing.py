@@ -15,7 +15,7 @@ ESTIMATED STATE VOLUME, not from the core count.
 The sizing rule
 ---------------
     partitions = clamp(ceil(state_bytes / target_partition_bytes),
-                       min_partitions, max_partitions)
+                       1, max_partitions)
 
 - ``state_bytes`` = estimated resident state rows x row width. For a
   watermarked aggregate, rows ~ open windows x keys; for a
@@ -28,9 +28,14 @@ The sizing rule
   12.4s summed) vs 8 partitions at 221k (2.7s): halving partitions
   quartered commit cost. 256 MiB per partition is comfortably inside
   both providers' per-store capacity and keeps the count minimal.
-- ``min_partitions`` (default 8) is the parallelism floor: state
-  insert/probe is CPU work that still wants several cores even when
-  the state is tiny (the A/B's winning cell).
+- There is no parallelism floor: state volume alone sets the count,
+  down to 1, because each partition is one more state-store commit per
+  micro-batch. On 4 cores (BASELINE.md) App 1's ~3 state rows ran
+  micro-batches in about 0.6x the time on 1 partition than on 8, and the
+  App 2 join at ~40k rows/s on HDFS-backed state (the provider the
+  rule picks there) sustained ~1.5x the rows/s at 2 and 4 partitions
+  than at 8. Forced onto RocksDB, the same join measured 1 and 2
+  partitions slower than 8.
 
 CAVEAT (fixed-at-first-checkpoint): Spark pins the state partition
 count at the FIRST checkpoint of a query; changing
@@ -53,7 +58,6 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
 TARGET_PARTITION_BYTES = 256 << 20  # 256 MiB of state per partition
-MIN_PARTITIONS = 8
 MAX_PARTITIONS = 512
 
 # Provider crossover (BASELINE.md, round-6 soak): the HDFS-backed
@@ -75,6 +79,8 @@ PROVIDER_FLIP_HEAP_FRACTION = 0.5
 # HDFS-side estimate by this measured factor; RocksDB sizing keeps
 # using the serialized width (its resident cost measured BELOW width).
 HDFS_RESIDENT_BYTES_PER_WIDTH_BYTE = 5.0
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -159,16 +165,15 @@ def recommended_state_partitions(
     est_state_rows: int,
     row_width_bytes: int = 64,
     target_partition_bytes: int = TARGET_PARTITION_BYTES,
-    min_partitions: int = MIN_PARTITIONS,
     max_partitions: int = MAX_PARTITIONS,
 ) -> int:
     """Partition count such that each partition holds ~target bytes of
-    state — the A/B-derived rule (commit overhead scales with
-    partitions; memory/skew pressure bounds partition size from the
-    other side)."""
+    state, at least 1 — the A/B-derived rule (commit overhead scales
+    with partitions; memory/skew pressure bounds partition size from
+    the other side)."""
     state_bytes = max(0, est_state_rows) * row_width_bytes
-    need = math.ceil(state_bytes / target_partition_bytes) if state_bytes else 0
-    return max(min_partitions, min(max_partitions, need))
+    need = math.ceil(state_bytes / target_partition_bytes)
+    return max(1, min(max_partitions, need))
 
 
 def configure_stateful_shuffle(
@@ -181,7 +186,7 @@ def configure_stateful_shuffle(
     to start on a FRESH checkpoint (see module caveat) and return the
     chosen count."""
     n = recommended_state_partitions(est_state_rows, row_width_bytes, **kwargs)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(_SHUFFLE_KEY, str(n))
     return n
 
 
@@ -234,14 +239,14 @@ def start_stateful(
     micro-batch 0 fails analysis (found by the round-8 crossover soak,
     scripts/start_stateful_join_soak.py).
 
-    NOTE the helper intentionally does NOT restore the previous
-    ``spark.sql.shuffle.partitions``: micro-batch 0 plans
-    asynchronously after ``start()`` returns and reads the session
-    conf at that point — restoring immediately would race the very
-    setting this function exists to apply. Run batch work in the same
-    process from a separate ``spark.newSession()`` (shared
-    SparkContext, independent SQLConf) if the low stateful count would
-    hurt it; AQE makes the batch side largely insensitive anyway.
+    NOTE both settings are applied only around ``start()`` and the
+    caller's values (or their absence) are restored in a ``finally``,
+    so later batch queries in the same session do not inherit a
+    1-partition shuffle (AQE can coalesce reduce partitions, never
+    split them). This does not race micro-batch 0: ``start()`` clones
+    the session's SQL conf into the query's own session before it
+    returns, and micro-batch 0 plans (and pins into the checkpoint)
+    from that clone.
     """
     if est_state_rows is None:
         if rows_per_second is None:
@@ -252,7 +257,6 @@ def start_stateful(
             rows_per_second, watermark_seconds, join_window_seconds, n_sides
         )
     spark = df.sparkSession
-    configure_stateful_shuffle(spark, est_state_rows, row_width_bytes)
     # Provider crossover (BASELINE.md rule, engine behavior as of r7):
     # 'auto' picks HDFS under half-heap state and RocksDB past it —
     # the HDFS ceiling is JVM death, not degradation, so the flip must
@@ -263,11 +267,6 @@ def start_stateful(
         provider = recommend_state_provider(
             est_state_rows, row_width_bytes, executor_heap_bytes(spark)
         )
-    if provider is not None:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            _ROCKSDB_PROVIDER if provider == "rocksdb" else _HDFS_PROVIDER,
-        )
     writer = df.writeStream.format(format).outputMode(output_mode)
     if query_name:
         writer = writer.queryName(query_name)
@@ -277,4 +276,18 @@ def start_stateful(
         writer = writer.trigger(processingTime=processing_time)
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
-    return writer.start()
+    previous = {k: spark.conf.get(k, None) for k in (_SHUFFLE_KEY, _PROVIDER_KEY)}
+    try:
+        configure_stateful_shuffle(spark, est_state_rows, row_width_bytes)
+        if provider is not None:
+            spark.conf.set(
+                _PROVIDER_KEY,
+                _ROCKSDB_PROVIDER if provider == "rocksdb" else _HDFS_PROVIDER,
+            )
+        return writer.start()
+    finally:
+        for k, v in previous.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

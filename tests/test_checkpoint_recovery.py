@@ -222,3 +222,89 @@ def test_stream_stream_join_state_under_both_providers(
         if r.impression_id != -1
     }
     assert rows == {1: True, 2: False}
+
+
+def test_checkpoint_from_old_partition_floor_keeps_its_partitions(spark, tmp_path):
+    """A windowed_avg_stream checkpoint first started at 8 state
+    partitions (what the sizing rule's former floor of 8 gave every
+    small state) and restarted through start_stateful, whose rule now
+    picks 1 for this state, keeps its 8 partitions: Spark replays the
+    count pinned at the first checkpoint. A window that straddles the
+    restart proves the state came back, and every closed window equals
+    the batch aggregate of the same rows."""
+    from streams_prototyping_spark.streaming.pipelines import (
+        WINDOW_S,
+        windowed_avg_stream,
+    )
+    from streams_prototyping_spark.streaming.state_sizing import (
+        recommended_state_partitions,
+        start_stateful,
+    )
+
+    schema = "ts timestamp, value double"
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+
+    def add(*specs):
+        rows = [(BASE + dt.timedelta(seconds=s), float(v)) for s, v in specs]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        return rows
+
+    def stream():
+        events = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        return windowed_avg_stream(events.parquet(src))
+
+    # phase 1: started the way the old floor did, at 8 partitions; the
+    # 200 s row opens the window [180, 210) and closes [0, 30), [30, 60)
+    rows = add((0, 1.0), (20, 3.0), (35, 5.0)) + add((200, 7.0))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = (
+            stream().writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.processAllAvailable()
+    q.stop()
+
+    # phase 2: restart through start_stateful; 205 s lands in the open
+    # window [180, 210), 500 s closes it and [210, 240)
+    rows += add((205, 2.0), (210, 4.0)) + add((500, 6.0))
+    assert recommended_state_partitions(3) == 1
+    q2 = start_stateful(
+        stream(),
+        est_state_rows=3,
+        format="parquet",
+        output_mode="append",
+        checkpoint_dir=ckpt,
+        options={"path": sink},
+    )
+    q2.processAllAvailable()
+    q2.stop()
+    assert [op["numShufflePartitions"] for op in q2.lastProgress["stateOperators"]] == [8]
+    state0 = tmp_path / "ckpt" / "state" / "0"
+    assert sum(1 for p in state0.iterdir() if p.name.isdigit()) == 8
+
+    # batch aggregate of the same rows, over the windows the final
+    # watermark (max event time - 60 s) has closed
+    watermark = max(ts for ts, _ in rows) - dt.timedelta(seconds=60)
+    width = dt.timedelta(seconds=WINDOW_S)
+    windows = {}
+    for ts, v in rows:
+        start = BASE + ((ts - BASE) // width) * width
+        windows.setdefault(start, []).append(v)
+    expected = {
+        start: (sum(2 * v for v in vs) / len(vs), sum(vs) / len(vs), len(vs))
+        for start, vs in windows.items()
+        if start + width <= watermark
+    }
+    got = {}
+    for r in spark.read.parquet(sink).collect():
+        assert r.window_start not in got, f"window {r.window_start} emitted twice"
+        got[r.window_start] = (r.avg_x2, r.avg_v, r.n_events)
+    assert len(expected) == 4 and expected[BASE + dt.timedelta(seconds=180)][2] == 2
+    assert got == expected

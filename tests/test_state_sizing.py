@@ -1,11 +1,14 @@
 """State-partition auto-sizing (VERDICT r5 item 4): the round-5 A/B
 proved stateful-query throughput is per-batch state-COMMIT-bound — 8
-state partitions ~2x the throughput of 32 on the same workload. These
-tests pin the rule that turns that finding into code."""
+state partitions ~2x the throughput of 32 on the same workload, and
+the 4-core grids (BASELINE.md) found the same below 8. These tests pin
+the rule that turns that finding into code: state volume alone sets
+the count."""
+
+import json
 
 from streams_prototyping_spark.streaming.state_sizing import (
     MAX_PARTITIONS,
-    MIN_PARTITIONS,
     configure_stateful_shuffle,
     estimate_join_state_rows,
     recommended_state_partitions,
@@ -24,8 +27,7 @@ def test_small_state_gets_the_ab_winner_not_the_core_count():
     The rule must pick the low-partition configuration (the measured
     ~268k rows/s cell), NOT the 32-core default (the ~142k cell)."""
     n = recommended_state_partitions(2_000_000, row_width_bytes=64)
-    assert n == MIN_PARTITIONS  # 128 MiB needs 2 partitions; floor = 8
-    assert n < 32
+    assert n == 1  # 128 MiB fits one 256 MiB partition
 
 
 def test_partitions_scale_with_state_volume():
@@ -33,18 +35,21 @@ def test_partitions_scale_with_state_volume():
     assert recommended_state_partitions(10**10, 64) == MAX_PARTITIONS
     # 8 GiB of state -> 32 partitions of 256 MiB each
     assert recommended_state_partitions((8 << 30) // 64, 64) == 32
-    # zero state still gets the parallelism floor
-    assert recommended_state_partitions(0, 64) == MIN_PARTITIONS
+    # zero state still gets one partition
+    assert recommended_state_partitions(0, 64) == 1
+    # one row past a partition's target opens the next partition
+    assert recommended_state_partitions((256 << 20) // 64 + 1, 64) == 2
 
 
 def test_tuned_ab_workload_picks_the_measured_winner():
     """The --tuned A/B workload (offered 133k rows/s, 120 s horizon):
-    the conservative offered-rate estimate is ~16M rows = 1 GiB, and
-    the rule must land on 8 partitions — the measured 221k rows/s cell
-    (16 partitions measured 140k; the commit-cost cliff sits between
-    8 and 16)."""
+    the conservative offered-rate estimate is ~16M rows = 0.95 GiB, and
+    the rule must land on 4 partitions of 256 MiB — under the 32-core
+    commit-cost cliff (16 partitions measured 140k rows/s, 8 measured
+    221k), where the 4-core grid (BASELINE.md) measured 4 partitions
+    ahead of 8."""
     est = estimate_join_state_rows(133_333, 60, 60, n_sides=1)
-    assert recommended_state_partitions(est, 64) == 8
+    assert recommended_state_partitions(est, 64) == 4
 
 
 def test_monotone_in_state_size():
@@ -64,21 +69,46 @@ def test_configure_sets_shuffle_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def _pinned(ckpt):
+    """(state partitions, offsets/0 conf): what a query's checkpoint
+    pinned on disk — one state/0/<partition-id> directory per state
+    partition, and the SQL conf recorded with micro-batch 0's offsets,
+    which Spark replays on every restart."""
+    parts = sum(1 for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit())
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    return parts, meta["conf"]
+
+
+def _session_settings(spark):
+    return {k: spark.conf.get(k, None) for k in (_SHUFFLE, _PROVIDER)}
+
+
 def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_path):
     """VERDICT r6 item 1: the production pipeline path itself must land
-    on the A/B-winning partition count. Start ads_with_clicks_stream
-    through start_stateful() on a FRESH checkpoint and verify the count
-    that got PINNED INTO THE CHECKPOINT (state/0/<partition-id> dirs —
-    the on-disk fact Spark replays forever after) equals the sizing
-    rule's recommendation, not the session default."""
+    on the rule's partition count. Start ads_with_clicks_stream through
+    start_stateful() on a FRESH checkpoint and verify the count and
+    provider that got PINNED INTO THE CHECKPOINT (the on-disk facts
+    Spark replays forever after) equal the rules' picks, not the
+    session default — and that the session's own settings are left as
+    they were."""
     import pyspark.sql.functions as F
 
     from streams_prototyping_spark.data import load_table
     from streams_prototyping_spark.streaming.pipelines import ads_with_clicks_stream
     from streams_prototyping_spark.streaming.sources import create_stream
-    from streams_prototyping_spark.streaming.state_sizing import start_stateful
+    from streams_prototyping_spark.streaming.state_sizing import (
+        _HDFS_PROVIDER,
+        _ROCKSDB_PROVIDER,
+        executor_heap_bytes,
+        recommend_state_provider,
+        start_stateful,
+    )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    before = _session_settings(spark)
     ev = load_table(spark, sf_dir, "events").limit(200)
     imp = ev.select(
         F.col("event_id").alias("impression_id"),
@@ -97,34 +127,33 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
     s_imp = create_stream(spark, "imp", imp.schema, transport="file", path=ipath)
     s_clk = create_stream(spark, "clk", clk.schema, transport="file", path=cpath)
 
-    # A 300k rows/s-per-side production estimate -> ~4.6 GiB of state ->
-    # NOT the floor and NOT the session default: proves the value flowed
-    # through the rule, not either constant.
-    ckpt = str(tmp_path / "ckpt")
-    expected = recommended_state_partitions(
-        estimate_join_state_rows(300_000, 60, 60, n_sides=2)
+    # A 300k rows/s-per-side production estimate -> ~4.3 GiB of state ->
+    # not the session default: proves the value flowed through the rule
+    est = estimate_join_state_rows(300_000, 60, 60, n_sides=2)
+    expected = recommended_state_partitions(est)
+    assert expected == 18 and str(expected) != before[_SHUFFLE]
+    want_provider = recommend_state_provider(est, 64, executor_heap_bytes(spark))
+    q = start_stateful(
+        ads_with_clicks_stream(s_imp, s_clk, watermark="60 seconds"),
+        rows_per_second=300_000,
+        watermark_seconds=60,
+        join_window_seconds=60,
+        n_sides=2,
+        format="memory",
+        output_mode="append",
+        query_name="ssj_sized",
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    assert expected != MIN_PARTITIONS and str(expected) != before
-    try:
-        q = start_stateful(
-            ads_with_clicks_stream(s_imp, s_clk, watermark="60 seconds"),
-            rows_per_second=300_000,
-            watermark_seconds=60,
-            join_window_seconds=60,
-            n_sides=2,
-            format="memory",
-            output_mode="append",
-            query_name="ssj_sized",
-            checkpoint_dir=ckpt,
-        )
-        q.processAllAvailable()
-        q.stop()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(expected)
-        state0 = tmp_path / "ckpt" / "state" / "0"
-        part_dirs = [p for p in state0.iterdir() if p.name.isdigit()]
-        assert len(part_dirs) == expected
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert _session_settings(spark) == before
+    q.processAllAvailable()
+    q.stop()
+    parts, conf = _pinned(tmp_path / "ckpt")
+    assert parts == expected
+    assert conf[_SHUFFLE] == str(expected)
+    assert conf[_PROVIDER] == (
+        _ROCKSDB_PROVIDER if want_provider == "rocksdb" else _HDFS_PROVIDER
+    )
+    assert _session_settings(spark) == before
 
 
 def test_mem_str_parsing():
@@ -200,7 +229,8 @@ def test_start_stateful_auto_flips_provider(spark, sf_dir, tmp_path):
     """A state estimate past half the executor heap must start the
     query on the RocksDB provider (and a small one must start on — or
     return to — HDFS), because the HDFS ceiling is JVM death and the
-    provider pins at the first checkpoint like the partition count."""
+    provider pins at the first checkpoint like the partition count.
+    Both land in the checkpoint; neither stays in the session."""
     import pyspark.sql.functions as F
 
     from streams_prototyping_spark.data import load_table
@@ -211,29 +241,25 @@ def test_start_stateful_auto_flips_provider(spark, sf_dir, tmp_path):
         start_stateful,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    before = _session_settings(spark)
     events = load_table(spark, sf_dir, "events").select("ts", "value").limit(50)
     path = str(tmp_path / "ev")
     events.write.parquet(path)
     heap = executor_heap_bytes(spark)
     big = (heap // 2) // 64 + 1  # rows such that est state > half heap
-    try:
-        for est, want in ((big, "RocksDB"), (1000, "HDFS")):
-            stream = create_stream(
-                spark, "ev", events.schema, transport="file", path=path
-            )
-            q = start_stateful(
-                windowed_avg_stream(stream),
-                est_state_rows=est,
-                format="memory",
-                output_mode="complete",
-                query_name=f"wavg_{want}",
-                checkpoint_dir=str(tmp_path / f"ckpt_{want}"),
-            )
-            q.processAllAvailable()
-            q.stop()
-            assert want in spark.conf.get(key)
-    finally:
-        spark.conf.unset(key)
-        spark.conf.set("spark.sql.shuffle.partitions", before_parts)
+    for est, want in ((big, "RocksDB"), (1000, "HDFS")):
+        stream = create_stream(spark, "ev", events.schema, transport="file", path=path)
+        q = start_stateful(
+            windowed_avg_stream(stream),
+            est_state_rows=est,
+            format="memory",
+            output_mode="complete",
+            query_name=f"wavg_{want}",
+            checkpoint_dir=str(tmp_path / f"ckpt_{want}"),
+        )
+        q.processAllAvailable()
+        q.stop()
+        parts, conf = _pinned(tmp_path / f"ckpt_{want}")
+        assert want in conf[_PROVIDER]
+        assert parts == recommended_state_partitions(est)
+        assert _session_settings(spark) == before
